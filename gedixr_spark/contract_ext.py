@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from gedixr_spark.operators import dedup, events, similarity, text
 from gedixr_spark.operators.multimodal import attach_fake_payload
+from gedixr_spark.session import local_frame
 
 
 _SCRATCH_ROOT: str | None = None
@@ -1204,7 +1205,8 @@ def q_cdc_incremental_state(spark, sf_dir):
         F.col("n_rows").cast("long").alias("n_rows"),
         F.col("sum").alias("sum"),
     )
-    summary = spark.createDataFrame(
+    summary = local_frame(
+        spark,
         [("cursor", int(pos), int(n_changes), float(0))],
         "leg string, key long, n_rows long, sum double",
     )
@@ -1287,7 +1289,8 @@ def q_cdc_mirror(spark, sf_dir):
         F.col("n_rows").cast("long").alias("n_rows"),
     )
     pos = cursor_position(spark, src, "mirror")
-    summary = spark.createDataFrame(
+    summary = local_frame(
+        spark,
         [("stream", int(pos), int(out["batches"]))],
         "leg string, key long, n_rows long",
     )
@@ -1342,7 +1345,8 @@ def q_manifest_checkpoint(spark, sf_dir):
         F.col("l_returnflag").alias("key"),
         F.col("n_rows").cast("long").alias("n_rows"),
     )
-    summary = spark.createDataFrame(
+    summary = local_frame(
+        spark,
         [("planning", f"{len(keep)}/{total}", int(surv))],
         "leg string, key string, n_rows long",
     )

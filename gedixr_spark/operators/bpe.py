@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType
 
+from gedixr_spark.session import local_frame
+
 EOW = "</w>"
 
 
@@ -205,13 +207,12 @@ def save_merges(spark, merges: list[tuple[str, str]], path: str) -> str:
     every encode job (and every later incremental corpus batch)
     loads the same artifact, so token counts stay comparable across
     pipeline runs."""
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     )
-    # localCheckpoint: see similarity.save_centroids — py-RDD-backed
-    # write tasks re-launch Python workers per parent partition
-    df.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
     return path
 
 
@@ -347,7 +348,8 @@ def load_tokenizer_json(spark, path: str) -> tuple[list[tuple[str, str]], DataFr
     with open(path, encoding="utf-8") as f:
         doc = _json.load(f)
     merges = [tuple(m.split(" ", 1)) for m in doc["model"]["merges"]]
-    vocab = spark.createDataFrame(
+    vocab = local_frame(
+        spark,
         [(t, i) for t, i in doc["model"]["vocab"].items()],
         "token string, token_id int",
     )

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
+from gedixr_spark.session import local_frame
+
 
 def _assign_udf(centroids: np.ndarray) -> Column:
     """Factory: nearest-centroid (squared-L2) assignment, vectorized;
@@ -160,12 +162,8 @@ def save_kmeans_centroids(spark, centroids: np.ndarray, path: str) -> str:
     so load-then-assign is bit-identical to fit-then-assign."""
     cen = np.asarray(centroids, dtype=np.float64)
     rows = [(i, [float(x) for x in row]) for i, row in enumerate(cen)]
-    # localCheckpoint: write tasks over a Python-parallelized RDD
-    # re-launch a Python worker per parent partition (~5 s for a
-    # metadata-sized frame; see similarity.save_centroids)
-    spark.createDataFrame(
-        rows, "cluster int, centroid array<double>"
-    ).localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
+    df = local_frame(spark, rows, "cluster int, centroid array<double>")
+    df.coalesce(1).write.mode("overwrite").parquet(path)
     return path
 
 

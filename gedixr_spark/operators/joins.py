@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gedixr_spark.geo import st_intersects_polygon
+from gedixr_spark.session import local_frame
 
 
 class MergeError(ValueError):
@@ -228,7 +229,8 @@ def spatial_join_aoi_indexed(
             for cy in range(int(math.floor(ymin / cell_deg)), int(math.floor(ymax / cell_deg)) + 1):
                 index_rows.append((cx, cy, name, xmin, ymin, xmax, ymax, nonrect))
     spark = shots.sparkSession
-    index = spark.createDataFrame(
+    index = local_frame(
+        spark,
         index_rows,
         "cell_x int, cell_y int, aoi_name string, xmin double, ymin double, "
         "xmax double, ymax double, nonrect boolean",
@@ -241,7 +243,8 @@ def spatial_join_aoi_indexed(
     # BroadcastHashJoin over ≤|AOIs| rows on the already-broadcast
     # candidate side — negligible against the scan it refines.
     edge_index = (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (name, rings_to_edge_tuples(rings))
                 for name, rings in non_rect_polys.items()

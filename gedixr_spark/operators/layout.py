@@ -21,6 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gedixr_spark.session import local_frame
+
 
 def zorder_index(
     lon: Column | str = "longitude",
@@ -194,7 +196,7 @@ def shard_manifest(
         for s in (statuses or [])
         if s.isFile()
     ]
-    sizes_df = spark.createDataFrame(sizes, "name string, bytes long")
+    sizes_df = local_frame(spark, sizes, "name string, bytes long")
     # input_file_name's URI spelling (file:/ vs file:///) differs from
     # the FileStatus URI; the basename is unique within the directory
     # and identical in both, so join on that

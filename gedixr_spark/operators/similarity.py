@@ -28,6 +28,7 @@ from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
 from gedixr_spark.operators.clustering import kmeans_fit
+from gedixr_spark.session import local_frame
 
 
 def quantize(col: Column | str, scale: int = 1000) -> Column:
@@ -269,16 +270,11 @@ def kmeans_to_ivf_centroids(centroids, scale: int = 10_000) -> list[list[int]]:
 def save_centroids(spark, centroids: list[list[int]], path: str) -> str:
     """Persist an IVF centroid set as a tiny parquet (cell, weights) —
     the index metadata a 100 TB vector store writes once and every
-    query/ingest job broadcast-loads. Built JVM-side (range + one
-    `_lit_mat` plan constant), NOT createDataFrame(py rows): a write
-    job over a Python-parallelized RDD re-launches a Python worker per
-    parent partition and measured ~5 s for 8 rows — the JVM build
-    writes in ~0.2 s."""
-    df = spark.range(len(centroids)).select(
-        F.col("id").cast("int").alias("cell"),
-        F.element_at(_lit_mat(centroids), (F.col("id") + 1).cast("int")).alias(
-            "weights"
-        ),
+    query/ingest job broadcast-loads."""
+    df = local_frame(
+        spark,
+        [(i, [int(w) for w in c]) for i, c in enumerate(centroids)],
+        "cell int, weights array<long>",
     )
     df.coalesce(1).write.mode("overwrite").parquet(path)
     return path
@@ -731,13 +727,8 @@ def save_pq_codebooks(
         for j, cb in enumerate(codebooks)
         for c, cent in enumerate(cb)
     ]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<long>"
-    )
-    # pin the Python-parallelized rows into JVM blocks before writing:
-    # write tasks over a py-RDD re-launch a Python worker per parent
-    # partition (~5 s for a metadata-sized frame; see save_centroids)
-    df.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
+    df = local_frame(spark, rows, "subspace int, code int, centroid array<long>")
+    df.coalesce(1).write.mode("overwrite").parquet(path)
     return path
 
 

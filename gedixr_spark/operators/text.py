@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gedixr_spark.session import local_frame
+
 # small fixed marker sets for the n-gram/stopword language heuristic;
 # deterministic and engine-portable (the point is the operator shape,
 # not linguistic accuracy)
@@ -1005,7 +1007,7 @@ def bm25_topk_multi(
     stats = lengths.agg(
         F.count(F.lit(1)).alias("__n_docs"), F.avg("dl").alias("__avgdl")
     )
-    qt = spark.createDataFrame(pairs, "query_id long, term string")
+    qt = local_frame(spark, pairs, "query_id long, term string")
     want = sorted({t for _, t in pairs})
     hits = (
         tf_index.filter(F.col("term").isin(want))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from gedixr_spark.operators import dedup, text
 from gedixr_spark.operators.sampling import leakage_safe_split
+from gedixr_spark.session import local_frame
 
 
 def prepare_corpus(
@@ -94,10 +95,6 @@ def prepare_corpus(
     )
     note("after_exact_dedup", survivors)
 
-    spark = docs.sparkSession
-    clusters = spark.createDataFrame(
-        [], "doc_id long, cluster_id long, is_survivor boolean"
-    )
     if near_dedup:
         # LSH band-candidate pairs feed CC directly (the registry's
         # checked shape); callers needing exact-Jaccard confirmation
@@ -109,6 +106,10 @@ def prepare_corpus(
         clusters = dedup.dedup_clusters_star(pairs)
         survivors = dedup.apply_dedup(survivors, clusters, id_col=id_col)
         note("after_near_dedup", survivors)
+    else:
+        clusters = local_frame(
+            docs.sparkSession, [], "doc_id long, cluster_id long, is_survivor boolean"
+        )
 
     if token_budget is not None:
         from gedixr_spark.operators.sampling import budget_select

@@ -9,8 +9,10 @@ default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, TimestampType
 
 
 def get_spark(
@@ -69,3 +71,55 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows → a DataFrame over a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes the rows as a
+    Python RDD (``Scan ExistingRDD``), so every collect or broadcast of
+    the frame launches Spark jobs. The tables the engine builds on the
+    driver (granule inventory, AOI table, join cell/edge indexes, CDC
+    role maps, one-row summaries) are tiny and read many times; as a
+    ``LocalRelation`` they are collected on the driver, and filters and
+    projections over them fold into the relation, with no job at all.
+
+    ``rows`` are positional tuples matching ``schema`` (a DDL string or
+    a ``StructType``). Non-empty rows travel as one ``pyarrow.Table``,
+    which ``createDataFrame`` turns into a ``LocalRelation`` whatever
+    the Arrow conf says; empty rows go straight to the JVM
+    ``createDataFrame(List<Row>, StructType)``, skipping Arrow's
+    first-use cost. Non-empty rows may not hold ``timestamp`` values:
+    ``createDataFrame`` reads a naive ``datetime`` in the process's
+    local time zone and Arrow reads it as UTC, so they are refused
+    rather than shifted (ship epoch micros instead).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    if not rows:
+        jschema = spark._jsparkSession.parseDataType(schema.json())
+        jrows = spark.sparkContext._jvm.java.util.ArrayList()
+        return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
+    if _has_timestamp(schema):
+        raise TypeError(f"local_frame: non-empty rows with a timestamp field: {schema.simpleString()}")
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
+
+
+def _has_timestamp(dt: DataType) -> bool:
+    if isinstance(dt, TimestampType):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_timestamp(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.keyType) or _has_timestamp(dt.valueType)
+    return False

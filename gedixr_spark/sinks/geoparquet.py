@@ -12,8 +12,9 @@ AOI, named ``{now}_{product}_{flt}[_{aoi}].parquet``
   parquet writer, so a driver-side pyarrow pass stamps it per file after
   the distributed write. pyarrow exposes no footer-only edit, so this IS
   an O(data) decode/re-encode per file (codec and row-group boundaries
-  are preserved); at large scale prefer stamping in the same job that
-  writes, or a distributed mapPartitions re-write.
+  are preserved, timestamps are coerced back to microseconds); at large
+  scale prefer stamping in the same job that writes, or a distributed
+  mapPartitions re-write.
 """
 
 from __future__ import annotations
@@ -118,7 +119,10 @@ def _stamp_geo_metadata(root: Path) -> None:
     each file is decoded and re-encoded. What IS preserved: the
     original compression codec and the row-group boundaries (each row
     group is read and re-written individually), so the Spark writer's
-    physical layout survives the stamp."""
+    physical layout survives the stamp. Timestamps are re-written as
+    INT64 microseconds (``coerce_timestamps="us"``): pyarrow decodes
+    Spark's timestamps to nanoseconds, a precision Spark cannot read
+    back."""
     import pyarrow.parquet as pq
 
     geo = json.dumps(GEO_META_TEMPLATE).encode()
@@ -137,7 +141,9 @@ def _stamp_geo_metadata(root: Path) -> None:
         schema = pf.schema_arrow.with_metadata(schema_meta)
         groups = [pf.read_row_group(i) for i in range(meta_md.num_row_groups)]
         pf.close()
-        with pq.ParquetWriter(f, schema, compression=codec) as w:
+        with pq.ParquetWriter(
+            f, schema, compression=codec, coerce_timestamps="us"
+        ) as w:
             for g in groups:
                 w.write_table(g.replace_schema_metadata(schema_meta))
         # drop the now-stale Hadoop checksum sidecar or re-reads fail CRC

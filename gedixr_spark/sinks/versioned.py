@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gedixr_spark.operators.layout import _hadoop_fs
+from gedixr_spark.session import local_frame
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1409,7 +1410,7 @@ def set_table_expectations(
             raise ValueError(
                 f"check name {name!r} must be a plain identifier"
             )
-        probe = spark.createDataFrame([], schema).filter(
+        probe = local_frame(spark, [], schema).filter(
             F.expr(expr).cast("boolean")
         )
         probe.schema  # forces analysis: unresolvable exprs raise HERE
@@ -2356,7 +2357,7 @@ def read_versioned(
                 f"{path} is empty at version {version} and no commit has "
                 "recorded a schema yet — nothing to read"
             )
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     if merge_schema is None:
         # per-live-file schemas survive log expiry via the checkpoint's
         # file_schemas (a raw entry scan would miss evolution that
@@ -3160,7 +3161,7 @@ def commit_merge(
                 ],
             )
     else:
-        t = spark.createDataFrame([], target_schema)
+        t = local_frame(spark, [], target_schema)
     # One join, shaped by the clause set (r9 ADVICE): with inserts
     # enabled it's a FULL OUTER join so inserts are the NULL-target
     # side of the SAME pinned join — no second anti-join over a
@@ -3897,7 +3898,7 @@ def read_appended(
         schema = _latest_schema(spark, path, cap)
         if schema is None:
             raise ValueError(f"{path} has no recorded schema")
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     # cap routes the scan through column mapping when active (a feed
     # range straddling a rename surfaces cap's names); mergeSchema
     # when the table's files disagree (a feed range straddling
@@ -3992,7 +3993,7 @@ def table_changes(
         return m
 
     live, dvs = _replay_state(spark, path, since_version)
-    empty = spark.createDataFrame([], cap_schema)
+    empty = local_frame(spark, [], cap_schema)
     # per-file write schemas, tracked through the walk so every leg
     # scan over provably-uniform files (removed-at-cap old sides
     # included, which the live-at-cap proof can't see) plans from the
@@ -4049,13 +4050,14 @@ def table_changes(
                 spark, path, allf, dv_state, merge_schema=True,
                 file_col="__f", cap=cap, known_schema=_leg_schema(allf),
             )
-            vdf = spark.createDataFrame(
+            vdf = local_frame(
+                spark,
                 [
                     (f.rsplit("/", 1)[-1], v)
                     for v, fl in pending_appends
                     for f in fl
                 ],
-                schema="__f string, __v long",
+                "__f string, __v long",
             )
             have = set(scanned.columns)
             legs.append(
@@ -4202,9 +4204,7 @@ def table_changes(
                 for f in add_
             ),
         ]
-        rdf = spark.createDataFrame(
-            roles, schema="__f string, __v long, __side int"
-        )
+        rdf = local_frame(spark, roles, "__f string, __v long, __side int")
         have = set(scanned.columns)
         joined = scanned.join(F.broadcast(rdf), on="__f").select(
             *[
@@ -4328,7 +4328,8 @@ def table_changes(
     _flush_appends(dvs)
     _flush_diffs()
     if not legs:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [
@@ -4387,7 +4388,7 @@ def read_quarantine(
         schema = _latest_schema(spark, path, version)
         if schema is None:
             raise ValueError(f"{path} has no recorded schema")
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     qdir = path.rstrip("/") + "/quarantine"
     return spark.read.option("mergeSchema", "true").parquet(
         *[qdir + "/" + f for f in files]
@@ -5207,7 +5208,7 @@ def read_where_all(
         schema = _latest_schema(spark, path, version)
         if schema is None:
             raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        out = local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     else:
         # merge-on-read: live delete vectors apply to pruned reads too
         cap = _cap_of(spark, path, version)
@@ -5259,7 +5260,7 @@ def read_where(
         schema = _latest_schema(spark, path, version)
         if schema is None:
             raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        out = local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     else:
         # merge-on-read: live delete vectors apply to pruned reads too
         cap = _cap_of(spark, path, version)
@@ -5573,7 +5574,7 @@ def read_point(
         schema = _latest_schema(spark, path, version)
         if schema is None:
             raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        out = local_frame(spark, [], StructType.fromJson(json.loads(schema)))
     else:
         # merge-on-read: live delete vectors apply to pruned reads too
         cap = _cap_of(spark, path, version)

@@ -20,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gedixr_spark.session import local_frame
+
 _ENVELOPE_SIZES = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}
 
 
@@ -158,7 +160,7 @@ def aoi_from_geopackage(
             tname if len(rows) == 1 else f"{tname}_{i}"
         )
         out.append((name, parse_gpkg_polygon_wkt(r[geom_col])))
-    return spark.createDataFrame(out, schema="aoi_name string, geometry_wkt string")
+    return local_frame(spark, out, "aoi_name string, geometry_wkt string")
 
 
 def _wkb_polygon(rings: list[list[list[float]]]) -> bytes:

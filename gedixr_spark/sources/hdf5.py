@@ -39,6 +39,7 @@ from gedixr_spark.constants import (
 )
 from gedixr_spark.functions.scalar import month_band
 from gedixr_spark.operators.filters import resolve_beams
+from gedixr_spark.session import local_frame
 
 
 def discover_granules(
@@ -55,7 +56,9 @@ def discover_granules(
         for p in Path(directory).rglob("*")
         if fnmatch.fnmatch(p.name, PATTERN[product])
     )
-    inv = spark.createDataFrame([(f, Path(f).name) for f in files] or [], "file_path string, file_name string")
+    inv = local_frame(
+        spark, [(f, Path(f).name) for f in files], "file_path string, file_name string"
+    )
     token = F.regexp_extract("file_name", FILENAME_DATE_REGEX, 1)
     return inv.withColumn(
         "acq_time", F.when(token != "", F.to_timestamp(token, FILENAME_DATE_FORMAT))
@@ -126,11 +129,13 @@ def read_granules(
                         error_acc.add(1)
                     yield pd.DataFrame({n: pd.Series(dtype="object") for n in out_names})
 
-    # one task per granule: a granule is the indivisible unit of work and
-    # read times vary 10×, so isolate stragglers instead of packing files
-    n = inventory.count()
+    # one partition per granule: a granule is the indivisible unit of work
+    # and read times vary 10×, so spread stragglers instead of packing
+    # files. Over a local inventory the month filter folds into the
+    # LocalRelation, so sizing by a collect runs no job.
+    n = len(inventory.select("file_path").collect())
     if n == 0:
-        return inventory.sparkSession.createDataFrame([], schema)
+        return local_frame(inventory.sparkSession, [], schema)
     return inventory.repartition(n).mapInPandas(extract, schema=schema)
 
 

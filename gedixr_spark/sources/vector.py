@@ -21,8 +21,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from gedixr_spark.geo import parse_wkt_rings  # validation only
+from gedixr_spark.session import local_frame
 
-AOI_COLUMNS = ("aoi_name", "geometry_wkt")
+AOI_SCHEMA = "aoi_name string, geometry_wkt string"
 
 
 def _rings_to_wkt(rings: list[list[list[float]]]) -> str:
@@ -55,9 +56,7 @@ def aoi_from_wkt(spark: SparkSession, aois: dict[str, str]) -> DataFrame:
     flattened to an ``aoi_name`` column."""
     for name, wkt in aois.items():
         parse_wkt_rings(wkt)
-    return spark.createDataFrame(
-        list(aois.items()), schema="aoi_name string, geometry_wkt string"
-    )
+    return local_frame(spark, aois.items(), AOI_SCHEMA)
 
 
 def aoi_from_geojson(spark: SparkSession, path: str | Path) -> DataFrame:
@@ -84,7 +83,7 @@ def aoi_from_geojson(spark: SparkSession, path: str | Path) -> DataFrame:
             )
         name = base if len(feats) == 1 else f"{base}_{i}"
         rows.append((name, wkt))
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 def _ring_signed_area(ring: list[list[float]]) -> float:
@@ -160,7 +159,7 @@ def aoi_from_shapefile(spark: SparkSession, path: str | Path) -> DataFrame:
         rows.append((name, _polys_to_wkt(polys)))
     if not rows:
         raise ValueError(f"no polygon records in {path}")
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 
@@ -241,7 +240,7 @@ def aoi_from_kml(spark: SparkSession, path: str | Path) -> DataFrame:
         rows.append((name, _polys_to_wkt(polys)))
     if not rows:
         raise ValueError(f"no polygon Placemarks in {path}")
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 def prepare_vec(spark: SparkSession, vec) -> DataFrame:

@@ -52,6 +52,26 @@ def test_write_geoparquet_partitioned_by_aoi(spark, tmp_path):
     assert (out / "aoi_name=a1").exists() and (out / "aoi_name=a2").exists()
 
 
+def test_geoparquet_round_trip_keeps_acq_time(spark, tmp_path):
+    # the footer stamp re-encodes every file through pyarrow; timestamps
+    # must come back as Spark-readable microseconds, not INT64 nanos
+    times = [
+        datetime.datetime(2020, 4, 4, 1, 2, 3, 456789),
+        datetime.datetime(2021, 12, 31, 23, 59, 59),
+    ]
+    df = spark.createDataFrame(
+        [("s1", "a1", 1.0, 2.0, times[0]), ("s2", "a2", 3.0, 4.0, times[1])],
+        "shot string, aoi_name string, longitude double, latitude double, "
+        "acq_time timestamp",
+    ).withColumn("geometry", st_point(F.col("longitude"), F.col("latitude")))
+    out = str(tmp_path / "gp_ts")
+    write_geoparquet(df, out, partition_by="aoi_name")
+    back = read_shots(spark, out)
+    assert dict(back.dtypes)["acq_time"] == "timestamp"
+    got = {r["shot"]: r["acq_time"] for r in back.select("shot", "acq_time").collect()}
+    assert got == {"s1": times[0], "s2": times[1]}
+
+
 def test_read_shots_casts_acq_time(spark, tmp_path):
     p = str(tmp_path / "shots")
     spark.createDataFrame(
